@@ -2,12 +2,9 @@ package graft
 
 import graft.dsl.{OutputColumn, TableSpec}
 import graft.plans.{CoverageValidator, FilterPropagation, SchemaManifest, TableSorter}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.slf4j.LoggerFactory
-
-import java.util.concurrent.Executors
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
 
 /** High-level orchestrator: anonymized, optionally subsetted copies of a
   * multi-table catalog — the Spark-native analogue of the reference's
@@ -16,9 +13,10 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * Per-table `TableSpec`s only need non-PK/non-FK columns: key columns are
   * passed through automatically (explicit entries win). Coverage is
   * validated BEFORE any data moves. Filters propagate through the FK graph
-  * (semi joins + self-ref closures). Tables are planned in FK-topological
-  * levels; for parquet sinks the level order is only a scheduling hint, for
-  * FK-constrained JDBC sinks it is load-bearing.
+  * (semi joins + self-ref closures). Parquet sinks write every planned
+  * table at once, each write counting its own rows; only the
+  * FK-constrained JDBC sink ([[runJdbc]]) orders writes by FK-topological
+  * level, because there parents must commit before their children.
   *
   * Snapshot consistency: the reference exports a PostgreSQL snapshot so all
   * per-table cursors see one point in time (DbCopier.scala:130-145). For
@@ -85,33 +83,25 @@ class Graft(
     }
   }
 
-  /** Execute the plan into parquet at `outDir/<table>`, levels sequential,
-    * tables within a level in parallel (reference DbCopier.scala:57-83);
-    * returns per-table row counts (reference returns Map[table -> count]).
+  /** Execute the plan into parquet at `outDir/<table>`, every table's
+    * write started at once (the reference copies level by level,
+    * DbCopier.scala:57-83, which only FK-constrained targets need — see
+    * [[runJdbc]]); returns per-table row counts (reference returns
+    * Map[table -> count]), taken from the writes themselves. Skipped tables
+    * report 0; tables in an FK cycle are not copied and not reported.
+    * Returns or throws only once every started write has ended.
     */
   def run(outDir: String, spark: SparkSession)(tableSpecs: (String, TableSpec)*): Map[String, Long] = {
     val plans  = plan(tableSpecs: _*)
-    val levels = TableSorter(manifest.tables, manifest.fks)
-    logger.info("Copying {} tables in {} levels...", plans.size, levels.size)
-
-    val pool             = Executors.newFixedThreadPool(math.max(2, levels.map(_.size).max))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      levels.foldLeft(Map.empty[String, Long]) { (acc, level) =>
-        val futures = level.collect {
-          case table if skippedTables.contains(table) =>
-            Future.successful(table -> 0L)
-          case table if plans.contains(table) =>
-            Future {
-              val path = s"$outDir/$table"
-              plans(table).write.mode("overwrite").parquet(path)
-              // Parquet footer metadata makes this count a metadata-only read.
-              table -> spark.read.parquet(path).count()
-            }
-        }
-        acc ++ Await.result(Future.sequence(futures), Duration.Inf).toMap
+    val sorted = TableSorter(manifest.tables, manifest.fks).flatten
+    val tables = sorted.filter(plans.contains)
+    logger.info("Copying {} tables at once...", tables.size)
+    val counts = Parallel.all("graft-copy", tables.map { table => () =>
+      Jobs.labeled(spark, s"graft.copy $table") {
+        Graft.countingWrite(plans(table))(_.write.mode("overwrite").parquet(s"$outDir/$table"))
       }
-    } finally pool.shutdown()
+    })
+    sorted.filter(skippedTables).map(_ -> 0L).toMap ++ tables.zip(counts)
   }
 
   /** Execute the plan into a TARGET DATABASE — the full reference workflow
@@ -136,8 +126,8 @@ class Graft(
     *                    [[graft.sources.JdbcCatalog.discoverSequences]]
     *                    (PG: `JdbcCatalog.PgSequenceDiscoverySql`); None
     *                    skips sequence reset (e.g. Derby targets)
-    * @return rows written per table (counted on the source plan — the
-    *         write itself is fire-and-forget batch inserts)
+    * @return rows handed to the sink per table, counted by the write's
+    *         own job (no second read of the source)
     */
   def runJdbc(
       url: String,
@@ -151,31 +141,25 @@ class Graft(
     val levels = TableSorter(manifest.tables, manifest.fks)
     logger.info("Copying {} tables into {} in {} levels...", plans.size, targetSchema, levels.size)
 
-    val pool             = Executors.newFixedThreadPool(math.max(2, levels.map(_.size).max))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val counts =
-      try {
-        levels.foldLeft(Map.empty[String, Long]) { (acc, level) =>
-          val futures = level.collect {
-            case table if skippedTables.contains(table) =>
-              Future.successful(table -> 0L)
-            case table if plans.contains(table) =>
-              Future {
-                val pks = manifest.pks.getOrElse(table, Seq.empty)
-                (onConflict, upsertVia) match {
-                  case (Some(oc), Graft.UpsertPath.StageAndMerge) =>
-                    graft.sinks.JdbcUpsertSink.upsertViaStagingMerge(
-                      plans(table), url, connectionProperties, targetSchema, table, oc, pks)
-                  case _ =>
-                    graft.sinks.JdbcUpsertSink.writeDeferringSelfRefs(
-                      plans(table), url, connectionProperties, targetSchema, table, onConflict, pks)
-                }
-                table -> plans(table).count()
-              }
+    val counts = levels.foldLeft(Map.empty[String, Long]) { (acc, level) =>
+      val tables = level.filter(plans.contains)
+      val written = Parallel.all("graft-copy-jdbc", tables.map { table => () =>
+        Jobs.labeled(plans(table).sparkSession, s"graft.copy $table") {
+          val pks = manifest.pks.getOrElse(table, Seq.empty)
+          Graft.countingWrite(plans(table)) { df =>
+            (onConflict, upsertVia) match {
+              case (Some(oc), Graft.UpsertPath.StageAndMerge) =>
+                graft.sinks.JdbcUpsertSink.upsertViaStagingMerge(
+                  df, url, connectionProperties, targetSchema, table, oc, pks)
+              case _ =>
+                graft.sinks.JdbcUpsertSink.writeDeferringSelfRefs(
+                  df, url, connectionProperties, targetSchema, table, onConflict, pks)
+            }
           }
-          acc ++ Await.result(Future.sequence(futures), Duration.Inf).toMap
         }
-      } finally pool.shutdown()
+      })
+      acc ++ level.filter(skippedTables).map(_ -> 0L) ++ tables.zip(written)
+    }
 
     sequenceDiscovery.foreach { query =>
       val conn = java.sql.DriverManager.getConnection(url, connectionProperties)
@@ -200,6 +184,16 @@ object Graft {
 
     /** Staging table + one ANSI `MERGE` ([[graft.sinks.JdbcUpsertSink.upsertViaStagingMerge]]). */
     case object StageAndMerge extends UpsertPath
+  }
+
+  /** Runs `write` on `df` and returns the rows it wrote, counted by an
+    * observed metric inside the write's own job — no re-read of the output
+    * and no second run of the source plan.
+    */
+  private def countingWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
   }
 
   /** Catalog loader for the driver-provided parquet fixture layout

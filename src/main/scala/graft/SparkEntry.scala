@@ -781,7 +781,7 @@ object SparkEntry {
 
     // The whole-pipeline gate: Graft.run end-to-end — coverage validation,
     // key merge, filter propagation (customer → orders → lineitem), five
-    // anonymizers, level-parallel parquet WRITE — then the written output
+    // anonymizers, all-tables-at-once parquet WRITE — then the written output
     // is read back and reduced to one scalar summary row per table
     // (rows, an order-independent stableHash checksum over the key +
     // anonymized string columns, and an exact-decimal numeric sum). This

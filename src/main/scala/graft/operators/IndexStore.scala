@@ -999,33 +999,23 @@ private[graft] object IndexStore {
     * whole call: every thunk runs to completion (no partial-state
     * ambiguity beyond what a crash already produces at any point — the
     * callers' staged-generation / pending-batch-marker protocols cover
-    * exactly these part-landed states), then the first error rethrows.
+    * exactly these part-landed states), then the first error rethrows
+    * with the others suppressed ([[graft.Parallel.all]]).
     */
   def inParallel[T](thunks: (() => T)*): Seq[T] = {
     require(thunks.nonEmpty, "inParallel: no thunks")
     if (thunks.size == 1) return Seq(thunks.head())
     val ctx  = held.get()
     val pend = pendingHeld.get()
-    val err  = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
-    val out  = new Array[Any](thunks.size)
-    val threads = thunks.zipWithIndex.map { case (t, i) =>
-      val th = new Thread(() => {
-        held.set(ctx)        // share the parent's lease tokens (re-entrant fast path)
-        pendingHeld.set(pend) // and its pending-batch markers: a nested
-        // withPendingBatch in a worker must take the outermost-owns-it
-        // fast path, NOT delete the shared marker while a sibling
-        // relation is still installing.
-        try out(i) = t()
-        catch { case e: Throwable => err.compareAndSet(null, e) }
-        finally { held.remove(); pendingHeld.remove() }
-      }, s"graft-index-parallel-$i")
-      th.setDaemon(true)
-      th.start()
-      th
-    }
-    threads.foreach(_.join())
-    Option(err.get()).foreach(e => throw e)
-    out.toSeq.asInstanceOf[Seq[T]]
+    graft.Parallel.all("graft-index-parallel", thunks.map { t => () =>
+      held.set(ctx)        // share the parent's lease tokens (re-entrant fast path)
+      pendingHeld.set(pend) // and its pending-batch markers: a nested
+      // withPendingBatch in a worker must take the outermost-owns-it
+      // fast path, NOT delete the shared marker while a sibling
+      // relation is still installing.
+      try t()
+      finally { held.remove(); pendingHeld.remove() }
+    })
   }
 
   /** Shared daemon scheduler for lease heartbeats — renewals are one tiny

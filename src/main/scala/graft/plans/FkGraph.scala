@@ -45,7 +45,7 @@ case class SchemaManifest(
   * alphabetical order within a level keeps the schedule deterministic.
   *
   * Driver-side planning only — the level order gates FK-constrained sink
-  * writes; for lake sinks it is merely a scheduling hint.
+  * writes; lake sinks write every table at once and need no order.
   */
 object TableSorter {
   private val logger = LoggerFactory.getLogger(getClass)

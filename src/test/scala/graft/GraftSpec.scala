@@ -186,6 +186,94 @@ class GraftSpec extends SparkSpec {
       written.select("name").collect().map(_.getString(0)).sorted shouldBe
         Array("Ann", "Bob").map(Anonymizer.FirstName(_)).sorted
     }
+
+    // customers <- orders <- items: a root filter reaches the grandchild.
+    def intRows(cols: Seq[String], rows: Seq[Int]*) = spark.createDataFrame(
+      java.util.Arrays.asList(rows.map(r => Row(r: _*)): _*),
+      StructType(cols.map(StructField(_, IntegerType, false))))
+    lazy val customers = intRows(Seq("id", "segment"), Seq(1, 1), Seq(2, 2), Seq(3, 1))
+    lazy val chainOrders = intRows(Seq("id", "cust_id", "total"),
+      Seq(10, 1, 5), Seq(11, 2, 6), Seq(12, 3, 7), Seq(13, 3, 8))
+    lazy val items = intRows(Seq("id", "order_id", "qty"),
+      Seq(100, 10, 1), Seq(101, 11, 2), Seq(102, 12, 3), Seq(103, 13, 4), Seq(104, 11, 5))
+    lazy val chain = SchemaManifest(
+      tables = Seq("customers", "orders", "items"),
+      pks = Map("customers" -> Seq("id"), "orders" -> Seq("id"), "items" -> Seq("id")),
+      fks = Seq(
+        LogicalFK("fk_orders_customers", "orders", "customers", Seq(("cust_id", "id"))),
+        LogicalFK("fk_items_orders", "items", "orders", Seq(("order_id", "id")))))
+    def chainGraft(skipped: Set[String] = Set.empty) =
+      new Graft(Map("customers" -> customers, "orders" -> chainOrders, "items" -> items), chain, skipped)
+    def chainSpecs(where: String) = Seq(
+      "customers" -> TableSpec.select(row => Seq(row.segment)).where(where),
+      "orders"    -> TableSpec.select(row => Seq(row.total)),
+      "items"     -> TableSpec.select(row => Seq(row.qty)))
+    def ids(path: String, c: String = "id"): Set[Int] =
+      spark.read.parquet(path).select(c).collect().map(_.getInt(0)).toSet
+
+    it("copies an FK chain under a root filter: counts come from the writes, children hold their parents' subset") {
+      val out  = java.nio.file.Files.createTempDirectory("graft-chain").toString
+      val descs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+      }
+      spark.sparkContext.addSparkListener(l)
+      val counts =
+        try {
+          val c = chainGraft().run(out, spark)(chainSpecs("segment = 1"): _*)
+          // The listener bus is async; let the run's job-start events land.
+          Thread.sleep(1500)
+          c
+        } finally spark.sparkContext.removeSparkListener(l)
+      counts shouldBe Seq("customers", "orders", "items").map(t => t -> spark.read.parquet(s"$out/$t").count()).toMap
+      counts shouldBe Map("customers" -> 2L, "orders" -> 3L, "items" -> 3L)
+      // Exactly the source children whose parent was copied.
+      ids(s"$out/customers") shouldBe Set(1, 3)
+      ids(s"$out/orders") shouldBe Set(10, 12, 13)
+      ids(s"$out/items") shouldBe Set(100, 102, 103)
+      // Every Spark job of the copy is labelled with its table.
+      descs should not be empty
+      all(descs.toArray(Array.empty[String]).toSeq) should fullyMatch regex "graft\\.copy (customers|orders|items)"
+    }
+
+    it("a root filter that matches nothing reports 0 for every dependent table") {
+      val out = java.nio.file.Files.createTempDirectory("graft-empty").toString
+      chainGraft().run(out, spark)(chainSpecs("segment = 99"): _*) shouldBe
+        Map("customers" -> 0L, "orders" -> 0L, "items" -> 0L)
+    }
+
+    it("a skipped table reports 0 and writes no directory") {
+      val out = java.nio.file.Files.createTempDirectory("graft-skip").toString
+      chainGraft(skipped = Set("items")).run(out, spark)(chainSpecs("segment = 1").take(2): _*) shouldBe
+        Map("customers" -> 2L, "orders" -> 3L, "items" -> 0L)
+      new java.io.File(s"$out/items").exists() shouldBe false
+    }
+
+    it("a failing table's error surfaces only after its sibling's write has finished") {
+      val out = java.nio.file.Files.createTempDirectory("graft-fail").toString
+      val e = intercept[Throwable] {
+        graft.run(out, spark)(
+          "users" -> TableSpec.select(row => Seq(
+            row.name.mapString(n => if (n == "Bob") throw new IllegalStateException("boom on Bob") else n),
+            row.email)),
+          "orders" -> TableSpec.select(row => Seq(row.note.mapString { n => Thread.sleep(1500); n })))
+      }
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).mkString("\n") should
+        include("boom on Bob")
+      new java.io.File(s"$out/orders/_SUCCESS").exists() shouldBe true
+    }
+
+    it("IndexStore.inParallel throws one failure with its failed sibling suppressed") {
+      val e = intercept[IllegalStateException] {
+        _root_.graft.operators.IndexStore.inParallel[Int](
+          () => throw new IllegalStateException("first"),
+          () => { Thread.sleep(300); throw new IllegalArgumentException("second") },
+          () => 3)
+      }
+      e.getMessage shouldBe "first"
+      e.getSuppressed.map(_.getMessage).toSeq shouldBe Seq("second")
+    }
   }
 
   describe("SQL function registration") {
